@@ -53,12 +53,11 @@ import os
 import time
 from datetime import datetime, timezone
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import rules, schema
-from .pipeline import run_pipeline_df, run_pipeline_staged
-
-WRITE_SALTS = 8  # max output files per `part` from one run
+from .pipeline import curate_scored, run_pipeline_staged, score_turns
 
 
 def run_fingerprint(input_path: str, params: dict | None = None) -> str:
@@ -1884,6 +1883,7 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
             f.write(str(os.getpid()))
         stage_out = os.path.join(scratch_root, "out")
         keep_scratch = False
+        scored = None  # the in-memory shape's persisted stage
         try:
             if staged:
                 # production shape: durably materialize the scored stage
@@ -1894,8 +1894,9 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
                     spark, pending, os.path.join(scratch_root, "scored"),
                     broadcast_conv_aggs=broadcast_conv_aggs)
             else:
-                result = run_pipeline_df(pending,
-                                         broadcast_conv_aggs=broadcast_conv_aggs)
+                scored = score_turns(pending).persist(
+                    StorageLevel.MEMORY_AND_DISK)
+                result = curate_scored(scored, broadcast_conv_aggs)
 
             # Stage THIS shard's output under its own scratch root (no two
             # concurrent jobs ever share a Hadoop committer staging dir),
@@ -1905,13 +1906,14 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
             # each partition either fully old or fully new (and an
             # unpublished partition has no marker → recomputes).
             #
-            # Salted repartition before the partitioned write: without it,
-            # every upstream task can hold rows of every part, producing
-            # n_tasks × n_parts tiny files (10^7 at cluster scale). Hashing
-            # on (part, salt) lands each part in ≤ WRITE_SALTS partitions —
-            # bounded file count AND no single-task serialization of a huge
-            # part.
-            n_out = max(len(todo) * WRITE_SALTS, 8)
+            # Rebalance on `part` before the partitioned write: without
+            # it, every upstream task can hold rows of every part,
+            # producing n_tasks × n_parts tiny files (10^7 at cluster
+            # scale). AQE coalesces the rebalanced output so each part
+            # lands as ONE file, and splits a part larger than
+            # spark.sql.adaptive.advisoryPartitionSizeInBytes across
+            # several tasks (one file each) — no single-task
+            # serialization of a huge part.
             tmeta: dict = {}
             if getattr(ledger, "log_defined_visibility", False):
                 tmeta = ledger.table_meta()
@@ -1922,11 +1924,7 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
                     # idempotent with the publish-time record below
                     record_table_schema(ledger, result.schema)
                     tmeta = ledger.table_meta()
-            (to_physical(
-                result.repartition(n_out, F.col("part"),
-                                   F.pmod(F.col("turn_idx"),
-                                          F.lit(WRITE_SALTS))),
-                tmeta)
+            (to_physical(result.hint("rebalance", "part"), tmeta)
              .write.mode("overwrite").partitionBy("part")
              .parquet(stage_out))
 
@@ -1957,14 +1955,16 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
                         "no partitions committed this invocation "
                         f"(staged output kept at {stage_out})")
 
-            # Publish: atomic per-partition swap into data/, then metrics,
-            # then markers — any prefix of this sequence is recoverable
-            # (an unpublished/half-published partition has no marker, so
-            # a rerun recomputes it; scratch is preserved once publish
-            # begins so new rows are never the casualty of a failed
-            # rename). The displaced old dir is parked under a
-            # dot-prefixed name, which Spark's partition discovery
-            # ignores — readers never see a bogus 'part=N.old' value.
+            # Publish: atomic per-partition swap of the staged part=N
+            # dir (its one rebalanced file, or the few a skew split
+            # made) into data/, then metrics, then markers — any prefix
+            # of this sequence is recoverable (an unpublished/half-
+            # published partition has no marker, so a rerun recomputes
+            # it; scratch is preserved once publish begins so new rows
+            # are never the casualty of a failed rename). The displaced
+            # old dir is parked under a dot-prefixed name, which Spark's
+            # partition discovery ignores — readers never see a bogus
+            # 'part=N.old' value.
             data_dir = os.path.join(out_dir, "data")
             os.makedirs(data_dir, exist_ok=True)
             keep_scratch = True  # publish started: scratch holds new data
@@ -1972,13 +1972,15 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
             shard_files: dict[int, dict] = {}  # log-defined publish only
             shard_stats: dict[int, dict] = {}
             if getattr(ledger, "log_defined_visibility", False):
-                # Log-defined publish: each staged file lands under its
-                # final partition dir with a shard-unique name — one put
-                # per NEW file, never a rename/copy of existing data (the
-                # object-store-safe shape) — and the commit's manifest
-                # defines the partition. A crash between file placement
-                # and marker commit leaves only invisible orphans
-                # (read_committed ignores them; vacuum reclaims them).
+                # Log-defined publish: each staged file (one per
+                # partition, more only where the rebalance split a
+                # skewed one) lands under its final partition dir with
+                # a shard-unique name — one put per NEW file, never a
+                # rename/copy of existing data (the object-store-safe
+                # shape) — and the commit's manifest defines the
+                # partition. A crash between file placement and marker
+                # commit leaves only invisible orphans (read_committed
+                # ignores them; vacuum reclaims them).
                 import pyarrow.parquet as pq
                 for p in todo:
                     src = os.path.join(stage_out, f"part={int(p)}")
@@ -2042,6 +2044,8 @@ def _run_checkpointed_grouped(spark, input_path, out_dir, params,
             # partitions either way)
             if not keep_scratch:
                 shutil.rmtree(scratch_root, ignore_errors=True)
+            if scored is not None:
+                scored.unpersist()
 
     # Lineage row (reference: db.py store_metadata upsert).
     meta_dir = os.path.join(out_dir, "_meta")
@@ -3017,10 +3021,12 @@ def compact_partition(spark: SparkSession, out_dir: str, part: int,
     `target_files` outputs and sorted within each, so every output file
     owns a DISJOINT key range and its manifest min/max stats become
     surgical — a point/range probe via read_committed(where=…) then
-    skips all but one file of the partition, where the salted-write
-    layout left every file spanning the full key range. Row-identical
-    to the unsorted compaction (same verify + same stale-swap rule);
-    the clustering exists purely to sharpen data skipping.
+    skips all but one file of the partition, where a partition
+    accreted from several writes (one file per write, or several when
+    a skewed write was split) has every file spanning the full key
+    range. Row-identical to the unsorted compaction (same verify +
+    same stale-swap rule); the clustering exists purely to sharpen
+    data skipping.
 
     zorder: with 2+ sort_by columns, cluster by their MORTON
     (bit-interleaved) key instead of the lexicographic concatenation —

@@ -26,11 +26,14 @@ marker (`runs`); checkpoint.revalidate_committed REFUSES to auto-
 recompute such a partition (a recompute from one input would silently
 drop the other runs' rows) and demands an explicit rebuild instead.
 
-Scale shape: fingerprints are one salted-free groupBy(conv_id) over
+Scale shape: fingerprints are one salt-free groupBy(conv_id) over
 (turn_idx, role, text) — text leaves the shuffle as a single md5 per
-conversation; the novelty check is a left-anti join of batch
-fingerprints against committed fingerprints (both fingerprint-only,
-16-byte keys); scoring runs only on novel conversations.
+conversation; the novelty check is one left join of the batch's
+per-fingerprint winners against the committed fingerprints (both
+fingerprint-only, 16-byte keys), cached at batch size, so each side is
+fingerprinted once per append; scoring runs only on novel
+conversations, and the write is rebalanced to one file per touched
+partition.
 """
 
 from __future__ import annotations
@@ -38,17 +41,19 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 import time
 import uuid
 from datetime import datetime, timezone
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schema
 from .checkpoint import (
-    WRITE_SALTS, _append_metrics, _gc_stale_scratch, detect_backend,
+    _append_metrics, _gc_stale_scratch, detect_backend,
     file_column_stats, make_ledger, read_committed, run_fingerprint)
-from .pipeline import run_pipeline_df
+from .pipeline import curate_scored, score_turns
 
 # unit separator: cannot occur in role/text tokens, so the fingerprint
 # of ("a|b", "c") can never collide with ("a", "b|c")
@@ -179,44 +184,59 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
                     "rows_appended": 0, "skipped_txn": True,
                     "wall_ms": int((time.monotonic() - t0) * 1000)}
 
-    fps = conv_fingerprints(new)
-    n_convs_in = fps.count()
-    winners = fps.groupBy("conv_fp").agg(F.min("conv_id").alias("conv_id"))
-    n_winners = winners.count()
-
+    # One fingerprint pass over the batch and one over the committed
+    # table (DV-masked by read_committed, so a deleted conversation's
+    # content counts as novel again), folded into ONE cached,
+    # batch-sized frame: a row per batch fingerprint with its winner
+    # (lowest conv_id — the keep-first convention), how many batch
+    # conversations share it, and whether the table already holds it.
+    # Every count and the pending semi-join read this frame, so the
+    # table is never re-fingerprinted inside the write job.
     existing = read_committed(spark, out_dir, backend)
-    existing_fps = (conv_fingerprints(
+    table_fps = (conv_fingerprints(
         existing.select("conv_id", "turn_idx", "role", "text"))
-        .select("conv_fp").distinct())
-    novel = winners.join(existing_fps, "conv_fp", "left_anti") \
-        .select("conv_id")
-    n_novel = novel.count()
-
-    summary = {"run_id": run_id, "convs_in": n_convs_in,
-               "convs_new": n_novel,
-               "convs_dup_prior": n_winners - n_novel,
-               "convs_dup_inbatch": n_convs_in - n_winners,
-               "rows_appended": 0, "wall_ms": 0}
-    if n_novel == 0:
-        if txn is not None:
-            ledger.set_txn(txn[0], int(txn[1]))  # unit fully processed
-        summary["wall_ms"] = int((time.monotonic() - t0) * 1000)
-        return summary
-
-    pending = new.join(novel, "conv_id", "left_semi")
-    result = run_pipeline_df(pending,
-                             broadcast_conv_aggs=broadcast_conv_aggs)
-
-    import shutil
-    _gc_stale_scratch(out_dir)
-    shard = hashlib.md5(f"{run_id}|{uuid.uuid4().hex}".encode()) \
-        .hexdigest()[:8]
-    scratch_root = os.path.join(out_dir, f"_scored-{run_id}-{shard}")
-    os.makedirs(scratch_root, exist_ok=True)
-    with open(os.path.join(scratch_root, "OWNER"), "w") as f:
-        f.write(str(os.getpid()))
-    stage_out = os.path.join(scratch_root, "out")
+        .select("conv_fp").distinct().withColumn("seen", F.lit(True)))
+    dedup = (conv_fingerprints(new).groupBy("conv_fp")
+             .agg(F.min("conv_id").alias("conv_id"),
+                  F.count(F.lit(1)).alias("n"))
+             .join(table_fps, "conv_fp", "left")
+             .select("conv_fp", "conv_id", "n",
+                     F.col("seen").isNotNull().alias("seen"))
+             .persist(StorageLevel.MEMORY_AND_DISK))
+    scored = None
+    scratch_root = None
     try:
+        c = dedup.agg(F.coalesce(F.sum("n"), F.lit(0)).alias("convs_in"),
+                      F.count(F.lit(1)).alias("winners"),
+                      F.count(F.when(~F.col("seen"), 1)).alias("novel")
+                      ).first()
+        n_convs_in, n_winners, n_novel = (
+            int(c.convs_in), int(c.winners), int(c.novel))
+
+        summary = {"run_id": run_id, "convs_in": n_convs_in,
+                   "convs_new": n_novel,
+                   "convs_dup_prior": n_winners - n_novel,
+                   "convs_dup_inbatch": n_convs_in - n_winners,
+                   "rows_appended": 0, "wall_ms": 0}
+        if n_novel == 0:
+            if txn is not None:
+                ledger.set_txn(txn[0], int(txn[1]))  # unit fully processed
+            summary["wall_ms"] = int((time.monotonic() - t0) * 1000)
+            return summary
+
+        novel = dedup.filter(~F.col("seen")).select("conv_id")
+        pending = new.join(novel, "conv_id", "left_semi")
+        scored = score_turns(pending).persist(StorageLevel.MEMORY_AND_DISK)
+        result = curate_scored(scored, broadcast_conv_aggs)
+
+        _gc_stale_scratch(out_dir)
+        shard = hashlib.md5(f"{run_id}|{uuid.uuid4().hex}".encode()) \
+            .hexdigest()[:8]
+        scratch_root = os.path.join(out_dir, f"_scored-{run_id}-{shard}")
+        os.makedirs(scratch_root, exist_ok=True)
+        with open(os.path.join(scratch_root, "OWNER"), "w") as f:
+            f.write(str(os.getpid()))
+        stage_out = os.path.join(scratch_root, "out")
         from .checkpoint import (
             record_table_schema, stats_columns, to_logical, to_physical)
         tmeta = ledger.table_meta() if getattr(
@@ -226,11 +246,9 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
             # new logical columns first, then land physical files
             record_table_schema(ledger, result.schema)
             tmeta = ledger.table_meta()
-        (to_physical(
-            result.repartition(max(8, WRITE_SALTS * 8), F.col("part"),
-                               F.pmod(F.col("turn_idx"),
-                                      F.lit(WRITE_SALTS))),
-            tmeta)
+        # rebalanced on `part`: one file per touched partition, split
+        # only where a partition outgrows AQE's advisory size
+        (to_physical(result.hint("rebalance", "part"), tmeta)
          .write.mode("overwrite").partitionBy("part").parquet(stage_out))
 
         mrows = (to_logical(spark.read.parquet(stage_out),
@@ -250,7 +268,6 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
         # crash orphans at most the partition being published — and
         # orphans are invisible to read_committed until vacuum.
         import pyarrow.parquet as pq
-        from .checkpoint import record_table_schema
         record_table_schema(ledger, result.schema)
         data_dir = os.path.join(out_dir, "data")
         rows_appended = 0
@@ -301,4 +318,8 @@ def append_batch_df(spark: SparkSession, new: DataFrame, out_dir: str,
         summary["wall_ms"] = wall_ms
         return summary
     finally:
-        shutil.rmtree(scratch_root, ignore_errors=True)
+        if scratch_root is not None:
+            shutil.rmtree(scratch_root, ignore_errors=True)
+        if scored is not None:
+            scored.unpersist()
+        dedup.unpersist()

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 from . import rules, schema, scoring
@@ -189,6 +190,18 @@ def _finalize(scored: DataFrame, conv: DataFrame) -> DataFrame:
     )
 
 
+def curate_scored(scored: DataFrame,
+                  broadcast_conv_aggs: bool | None = None) -> DataFrame:
+    """The pipeline after scoring: conversation aggregates joined back
+    to the scored turns. `scored` is consumed twice, so callers pass a
+    materialized frame (a persisted one, or a re-scan of stored
+    output) and own its lifetime — whoever persists it unpersists it."""
+    conv = conversation_aggregates(scored)
+    if broadcast_conv_aggs is True:
+        conv = F.broadcast(conv)
+    return _finalize(scored, conv)
+
+
 def run_pipeline_staged(spark, transcripts: DataFrame, scored_path: str,
                         broadcast_conv_aggs: bool | None = None) -> DataFrame:
     """Production (100 TB) shape of the pipeline: materialize the scored
@@ -204,11 +217,8 @@ def run_pipeline_staged(spark, transcripts: DataFrame, scored_path: str,
     request_processor/base_request_processor.py:305-428).
     """
     score_turns(transcripts).write.mode("overwrite").parquet(scored_path)
-    scored = spark.read.parquet(scored_path)
-    conv = conversation_aggregates(scored)
-    if broadcast_conv_aggs is True:
-        conv = F.broadcast(conv)
-    return _finalize(scored, conv)
+    return curate_scored(spark.read.parquet(scored_path),
+                         broadcast_conv_aggs)
 
 
 def run_pipeline_df(transcripts: DataFrame,
@@ -230,9 +240,5 @@ def run_pipeline_df(transcripts: DataFrame,
     """
     scored = score_turns(transcripts)
     if persist_scored:
-        from pyspark import StorageLevel
         scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
-    conv = conversation_aggregates(scored)
-    if broadcast_conv_aggs is True:
-        conv = F.broadcast(conv)
-    return _finalize(scored, conv)
+    return curate_scored(scored, broadcast_conv_aggs)

@@ -34,3 +34,29 @@ def transcripts_path(tmp_path_factory, transcripts_pdf):
     p = tmp_path_factory.mktemp("fixture") / "transcripts.parquet"
     fixtures.to_spark_parquet(transcripts_pdf, str(p))
     return str(p)
+
+
+@pytest.fixture()
+def split_writes(spark):
+    """Make a test-sized partition count as skewed for the duration of
+    one test. Writes rebalance on `part`, and AQE splits a partition
+    larger than spark.sql.adaptive.advisoryPartitionSizeInBytes across
+    several tasks (one file each), at map-output granularity — so the
+    scan split size shrinks too, giving the map side several tasks.
+    Yields a writer for transcripts frames whose small row groups let
+    the scan actually split. Both settings are restored afterwards."""
+    conf = {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "16k",
+            "spark.sql.files.maxPartitionBytes": "16k"}
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+
+    def write(pdf, path):
+        pdf.to_parquet(path, index=False, coerce_timestamps="us",
+                       allow_truncated_timestamps=True, row_group_size=250)
+
+    try:
+        yield write
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)

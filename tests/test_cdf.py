@@ -223,6 +223,13 @@ def test_consume_into_view_matches_recompute_every_poll(spark, table,
     restore_table(out, version=table["v1"])
     assert poll()["advanced"]
     assert _multiset(read_view(spark, view)) == recompute()
+    # the rollback left one file per partition: append a second batch
+    # (and consume it) so the compaction below has files to merge
+    pb = str(tmp_path / "extra2.parquet")
+    fixtures.to_spark_parquet(
+        fixtures.generate_transcripts(150, seed=95, n_parts=4), pb)
+    append_new_conversations(spark, pb, out)
+    assert poll()["advanced"]
     # compaction-only window: cursor advances with zero planned files,
     # snapshot carried forward
     led = make_ledger(out, "commitlog")

@@ -247,8 +247,8 @@ def test_commitlog_versions_are_immutable_and_ordered(tmp_path):
     assert led.run_success() is None
 
 
-def test_commitlog_orphans_invisible_until_vacuum(spark, small_input,
-                                                  tmp_path):
+def test_commitlog_orphans_invisible_until_vacuum(spark, tmp_path,
+                                                  split_writes):
     """Recomputing an invalidated partition under commitlog leaves the
     superseded commit's intact files on disk as ORPHANS: the snapshot
     reader never sees them, and vacuum() reclaims exactly them."""
@@ -256,6 +256,12 @@ def test_commitlog_orphans_invisible_until_vacuum(spark, small_input,
 
     from curator_spark.checkpoint import read_committed, vacuum
 
+    # one write lands one file per partition unless the partition
+    # outgrows the advisory size: split_writes makes part 0 several
+    # files, so deleting one leaves intact siblings to orphan
+    small_input = str(tmp_path / "t.parquet")
+    split_writes(fixtures.generate_transcripts(2500, seed=11, n_parts=4),
+                 small_input)
     out = str(tmp_path / "vac")
     run_checkpointed(spark, small_input, out, ledger_backend="commitlog")
     before = read_committed(spark, out).orderBy("conv_id", "turn_idx").toPandas()
@@ -492,10 +498,17 @@ def test_cancel_run_aborts_and_resumes(spark, tmp_path):
         except Exception as e:  # noqa: BLE001 — cancellation surfaces here
             result["err"] = e
 
+    run_id = run_fingerprint(big, None)
+    tracker = spark.sparkContext.statusTracker()
     t = threading.Thread(target=work)
     t.start()
-    _time.sleep(3)  # let the scoring jobs get airborne
-    cancel_run(spark, run_fingerprint(big, None))
+    # cancel once one of the run's jobs is airborne — a fixed sleep can
+    # outlast the whole run on a fast host
+    while t.is_alive() and "err" not in result:
+        if set(tracker.getJobIdsForGroup(f"curator-run-{run_id}")) \
+                & set(tracker.getActiveJobsIds()):
+            cancel_run(spark, run_id)
+        _time.sleep(0.02)
     t.join(300)
     if result.get("done"):
         pytest.skip("run outpaced the cancel on this host")

@@ -108,8 +108,8 @@ def test_sorted_compaction_sharpens_file_skipping(spark, table):
     """sort_by clustering (OPTIMIZE ZORDER's 1-D core): after a
     conv_id-clustered rewrite into 3 files, the files own disjoint
     conv_id ranges, so a point probe plans exactly one file of the
-    partition — the salted-write layout it replaces left every file
-    spanning the full range. Rows are identical before/after."""
+    partition, where the files of an appended-to partition each span
+    the full range. Rows are identical before/after."""
     from curator_spark.checkpoint import snapshot_files, table_row_count
     part = 1
     before = read_committed(spark, table).filter(f"part = {part}") \

@@ -111,7 +111,7 @@ def test_delete_by_nullable_key_keeps_null_rows(spark, table):
 
 
 def test_delete_conflicting_with_concurrent_compaction_raises(
-        spark, table, monkeypatch):
+        spark, table, monkeypatch, tmp_path):
     """DELETE vs concurrent OPTIMIZE: a compaction that replaces a
     candidate file between the delete's snapshot read and its commit
     makes the swap stale — replay ignores it, so the delete MUST raise
@@ -119,8 +119,17 @@ def test_delete_conflicting_with_concurrent_compaction_raises(
     rows stay live."""
     from curator_spark.checkpoint import (
         CommitLogLedger, ConcurrentDeleteError, compact_partition)
+    from curator_spark.incremental import append_new_conversations
     out, pdf = table["out"], table["pdf"]
     ids = sorted(pdf["conv_id"].unique())[:3]
+    # the racing compaction needs work to do: a second batch gives every
+    # partition a second file (one write lands one file per partition)
+    p2 = str(tmp_path / "b2.parquet")
+    fixtures.to_spark_parquet(
+        fixtures.generate_transcripts(300, seed=52, n_parts=4), p2)
+    append_new_conversations(spark, p2, out)
+    assert all(len(m["files"]) > 1
+               for m in make_ledger(out, "commitlog").committed().values())
     n_before = table_row_count(out)
 
     orig = CommitLogLedger.delete_rewrite

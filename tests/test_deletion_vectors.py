@@ -197,12 +197,20 @@ def test_dv_broadcast_join_path_matches_expression_path(spark, table,
     monkeypatch.setattr(cp, "_apply_dv", real)
 
 
-def test_dv_stale_mark_raises_conflict(spark, table):
+def test_dv_stale_mark_raises_conflict(spark, table, tmp_path):
     """A dv committed after a concurrent rewrite displaced its file is
     ignored by replay — the caller must hear about it (a silently
     no-opped right-to-be-forgotten is the one unacceptable outcome)."""
     import curator_spark.checkpoint as cp
+    from curator_spark.incremental import append_new_conversations
     led = make_ledger(table, "commitlog")
+    # the racing compaction needs work to do: a second batch gives every
+    # partition a second file (one write lands one file per partition)
+    p2 = str(tmp_path / "b2.parquet")
+    fixtures.to_spark_parquet(
+        fixtures.generate_transcripts(300, seed=32, n_parts=4), p2)
+    append_new_conversations(spark, p2, table)
+    assert all(len(m["files"]) > 1 for m in led.committed().values())
     vs = _victims(spark, table, 1)
     real_add_dv = cp.CommitLogLedger.add_dv
 

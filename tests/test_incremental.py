@@ -221,3 +221,90 @@ def test_upsert_never_materializes_revised_keys_on_driver(
     table = read_committed(spark, out)
     assert table.count() == len(b1)               # replaced, not added
     assert table.filter("text LIKE '%[rev2]%'").count() == len(batch)
+
+
+def _renamed(pdf, prefix):
+    """The same conversations' content under new conv_ids."""
+    out = pdf.copy()
+    out["conv_id"] = prefix + out["conv_id"]
+    out["part"] = out["conv_id"].map(
+        lambda c: fixtures.part_of(c, 4)).astype("int32")
+    return out
+
+
+def test_append_dedup_counts_exact_and_dv_deleted_content_is_novel(
+        spark, tmp_path):
+    """Novelty is judged against the LIVE table: content whose
+    conversation was removed by a DV delete is novel again when it is
+    re-delivered under a new conv_id. On a batch mixing novel,
+    prior-duplicate and in-batch-duplicate conversations every count
+    is exact."""
+    from curator_spark.checkpoint import delete_rows_dv
+
+    b1 = fixtures.generate_transcripts(800, seed=71, n_parts=4)
+    p1 = str(tmp_path / "b1.parquet")
+    fixtures.to_spark_parquet(b1, p1)
+    out = str(tmp_path / "out")
+    run_checkpointed(spark, p1, out, ledger_backend="commitlog")
+    ids = sorted(b1["conv_id"].unique())
+    gone, live = ids[:2], ids[2:5]
+    assert delete_rows_dv(spark, out, gone)["rows_deleted"] == \
+        int(b1["conv_id"].isin(gone).sum())
+
+    fresh = fixtures.generate_transcripts(200, seed=72, n_parts=4)
+    src = sorted(fresh["conv_id"].unique())[0]
+    prior = b1[b1["conv_id"].isin(live)]
+    batch = pd.concat([
+        fresh,
+        _renamed(fresh[fresh["conv_id"] == src], "zz-"),  # in-batch dup
+        _renamed(b1[b1["conv_id"].isin(gone)], "back-"),  # deleted: novel
+        _renamed(prior, "re-"),                          # prior dup
+        _renamed(prior, "re2-"),            # prior dup AND in-batch dup
+    ], ignore_index=True)
+    p2 = str(tmp_path / "b2.parquet")
+    fixtures.to_spark_parquet(batch, p2)
+
+    n_fresh = fresh["conv_id"].nunique()
+    s = append_new_conversations(spark, p2, out)
+    assert s["convs_in"] == n_fresh + 1 + len(gone) + 2 * len(live)
+    assert s["convs_new"] == n_fresh + len(gone)
+    assert s["convs_dup_prior"] == len(live)
+    assert s["convs_dup_inbatch"] == 1 + len(live)
+    assert s["rows_appended"] == \
+        len(fresh) + int(b1["conv_id"].isin(gone).sum())
+
+    table = read_committed(spark, out)
+    back = {r.conv_id for r in table.filter(
+        table.conv_id.startswith("back-")).select("conv_id")
+        .distinct().collect()}
+    assert back == {"back-" + c for c in gone}
+    assert table.count() == len(b1) + s["rows_appended"] \
+        - int(b1["conv_id"].isin(gone).sum())
+
+
+def test_append_releases_its_cached_frames(spark, tmp_path):
+    """An append persists its dedup frame and scored stage and must
+    release both — on the no-novel early return too — or every append
+    (and every streaming micro-batch) leaks one more cached RDD. The
+    in-memory (staged=False) checkpointed run releases its scored
+    stage the same way."""
+    def n_cached():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    n0 = n_cached()
+    b1 = fixtures.generate_transcripts(400, seed=73, n_parts=4)
+    p1 = str(tmp_path / "b1.parquet")
+    fixtures.to_spark_parquet(b1, p1)
+    out = str(tmp_path / "out")
+    run_checkpointed(spark, p1, out, ledger_backend="commitlog",
+                     staged=False)
+    assert n_cached() == n0
+    for seed in (74, 75):
+        p = str(tmp_path / f"b{seed}.parquet")
+        fixtures.to_spark_parquet(
+            fixtures.generate_transcripts(150, seed=seed, n_parts=4), p)
+        assert append_new_conversations(spark, p, out)["convs_new"] > 0
+        assert n_cached() == n0
+    s = append_new_conversations(spark, p, out)  # re-delivery
+    assert s["convs_new"] == 0
+    assert n_cached() == n0
